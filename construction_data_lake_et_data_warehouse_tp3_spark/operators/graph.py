@@ -92,6 +92,8 @@ def pagerank_products(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("src").alias("pid")).distinct().localCheckpoint(eager=True)
     )
     n = nodes.count()
+    if n == 0:  # no co-purchase edges: the declared frame, empty
+        return nodes.select(F.col("pid").alias("part_id"), F.lit(0.0).alias("rank"))
     r0 = int(SCALE / n)
     base = int((100 - DAMP_NUM) * r0 / DAMP_DEN)
     ranks = nodes.select("pid", F.lit(r0).cast("bigint").alias("r_int"))

@@ -83,9 +83,12 @@ def daily_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.withColumn("running_events", F.sum("n_events").over(w))
 
 
-def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization: gap > 30 min starts a new session (lag + cumulative
-    sum of session-start flags), then per-user session stats."""
+def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events + session_id: a gap of more than SESSION_GAP_MINUTES after a
+    user's previous event (lag + cumulative sum of session-start flags)
+    starts a new session. The gap is compared in microseconds, as the
+    oracles' fractional epoch() does; whole seconds would call a 1800.4 s
+    gap 1800 s and merge two sessions."""
     events = load_table(spark, sf_dir, "events")
     # an event with a NULL user or timestamp cannot be sessionized /
     # sequenced: Spark orders NULL keys FIRST and DuckDB LAST, so such
@@ -95,16 +98,19 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    prev = F.lag(us).over(by_user)
+    gap = F.lit(SESSION_GAP_MINUTES * 60 * 1_000_000)
     flagged = events.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts").cast("timestamp").cast("long")
-            - F.lag(F.col("ts").cast("timestamp").cast("long"), 1, 0).over(by_user)
-            > SESSION_GAP_MINUTES * 60,
-            1,
-        ).otherwise(F.when(F.lag("ts", 1).over(by_user).isNull(), 1).otherwise(0)),
+        "new_session", F.when(prev.isNull() | (us - prev > gap), 1).otherwise(0)
     )
-    sessions = flagged.withColumn("session_id", F.sum("new_session").over(by_user))
+    return flagged.withColumn("session_id", F.sum("new_session").over(by_user))
+
+
+def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sessionization: gap > 30 min starts a new session (lag + cumulative
+    sum of session-start flags), then per-user session stats."""
+    sessions = _sessions(spark, sf_dir)
     return (
         sessions.groupBy("user_id", "session_id")
         .agg(
@@ -134,25 +140,7 @@ def session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join; the final entry-type rollup is |event types| rows.
     The oracle derives the entry independently via a row_number()=1
     pick, so the struct-min trick is cross-checked each round."""
-    events = load_table(spark, sf_dir, "events")
-    # an event with a NULL user or timestamp cannot be sessionized /
-    # sequenced: Spark orders NULL keys FIRST and DuckDB LAST, so such
-    # rows silently produce different sessions per engine (dirty-input
-    # parity sweep) - excluded identically on BOTH engines
-    events = events.where(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = events.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts").cast("timestamp").cast("long")
-            - F.lag(F.col("ts").cast("timestamp").cast("long"), 1, 0).over(by_user)
-            > SESSION_GAP_MINUTES * 60,
-            1,
-        ).otherwise(F.when(F.lag("ts", 1).over(by_user).isNull(), 1).otherwise(0)),
-    )
-    sessions = flagged.withColumn("session_id", F.sum("new_session").over(by_user))
+    sessions = _sessions(spark, sf_dir)
     per_session = sessions.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         F.min(F.struct("ts", "event_id", "event_type"))

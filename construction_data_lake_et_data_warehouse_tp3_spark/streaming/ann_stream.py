@@ -42,9 +42,10 @@ from ..operators.clustering import (
     quantizer_fingerprint,
 )
 from ..warehouse.merge import ParquetTable, merge_into
+from .maintainer import StreamingMaintainer
 
 
-class StreamingVectorIndex:
+class StreamingVectorIndex(StreamingMaintainer):
     """IVF index fed by micro-batches of (vec_id, embedding) rows."""
 
     def __init__(self, spark: SparkSession, store_root: str, centroids: DataFrame):
@@ -77,17 +78,6 @@ class StreamingVectorIndex:
             .withColumn("qfp", F.lit(self.qfp))
         )
         return merge_into(self.table, assigned, ("vec_id",), stamp_updated_at=False)
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        """Run the index maintenance as a foreachBatch streaming query."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid) and None
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
 
     # ---- read side ------------------------------------------------------
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..warehouse.merge import ParquetTable, merge_into
+from .maintainer import StreamingMaintainer
 
 
 def train_baseline(values: DataFrame, value_col: str = "amount") -> tuple[float, float]:
@@ -58,7 +59,7 @@ def train_baseline(values: DataFrame, value_col: str = "amount") -> tuple[float,
     return float(row["mu"]), float(row["sigma"])
 
 
-class StreamingAnomalyMonitor:
+class StreamingAnomalyMonitor(StreamingMaintainer):
     """Score micro-batches of (id, value) rows against a frozen μ/σ
     baseline; alerts land exactly once in a MERGE-backed store."""
 
@@ -107,16 +108,6 @@ class StreamingAnomalyMonitor:
         if flagged.isEmpty():
             return 0
         return merge_into(self.alerts, flagged, (self.id_col,))
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid) and None
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
 
     def alert_count(self) -> int:
         return self.alerts.read().count() if self.alerts.exists() else 0

@@ -13,8 +13,8 @@ per batch instead of re-running corpus-wide CC.
 
 Per micro-batch of verified pairs (doc_a, doc_b):
 
-1. ledger check — replays of an applied batch are no-ops (the
-   index_stream/rollup_stream exactly-once discipline).
+1. ledger check — replays of an applied batch are no-ops (the applied-
+   ledger protocol of streaming/maintainer.py).
 2. MERGE the edges into the persistent edge store keyed (doc_a, doc_b)
    (idempotent; also what the differential test replays batch CC over).
 3. resolve both endpoints to their CURRENT labels (left join against the
@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..operators.curation import cluster_edges
 from ..warehouse.merge import ParquetTable, merge_into
+from .maintainer import LedgeredMaintainer
 
 #: reduced-graph size gate for the driver-side union-find fast path.
 #: The reduced graph is ≤ |batch| edges over label-nodes BY CONSTRUCTION
@@ -87,15 +88,16 @@ def _local_min_label(edges: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return [(n, find(n)) for n in parent]
 
 
-class StreamingClusterMaintainer:
+class StreamingClusterMaintainer(LedgeredMaintainer):
     """Persistent incremental connected-components over micro-batches of
     verified dup pairs (doc_a, doc_b)."""
 
+    _SKIPPED = {"edges": 0, "relabeled": 0}
+
     def __init__(self, spark: SparkSession, store_root: str):
-        self.spark = spark
+        super().__init__(spark, store_root)
         self.edge_table = ParquetTable(spark, os.path.join(store_root, "edges"))
         self.label_table = ParquetTable(spark, os.path.join(store_root, "labels"))
-        self.applied = ParquetTable(spark, os.path.join(store_root, "applied"))
 
     # ---- state views ----------------------------------------------------
 
@@ -123,19 +125,9 @@ class StreamingClusterMaintainer:
 
     # ---- the foreachBatch body ------------------------------------------
 
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
-    def process_batch(self, pairs: DataFrame, batch_id: int) -> dict:
+    def _fold(self, pairs: DataFrame, batch_id: int) -> dict:
         """Fold one micro-batch of verified pairs into the cluster state.
-        Returns {edges, relabeled} counts; replays are no-ops."""
-        if self._is_applied(batch_id):
-            return {"edges": 0, "relabeled": 0}
+        Returns {edges, relabeled} counts."""
         batch = (
             pairs.select(
                 F.least("doc_a", "doc_b").alias("doc_a"),
@@ -217,19 +209,4 @@ class StreamingClusterMaintainer:
         else:
             n_relabeled = 0
         batch.unpersist()
-        ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
-        merge_into(self.applied, ledger, ("batch_id",))
         return {"edges": n_edges, "relabeled": n_relabeled}
-
-    # ---- streaming attach ------------------------------------------------
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        """Attach to a stream of (doc_a, doc_b) verified-pair rows."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

@@ -4,11 +4,10 @@ cardinality, sample_stream = bottom-k sample/quantiles, this = CMS
 counts/heavy-hitters; batch twin operators/pipelines.cms_heavy_hitters).
 
 CMS cells are SUMS, so unlike the min-monoid sketches a replayed batch
-WOULD double-count — this maintainer therefore uses the partials+ledger
-discipline (index_stream/rollup_stream): per-batch cell increments MERGE
-keyed (d, bucket, batch_id) and an applied-batch ledger short-circuits
-replays; estimates fold the partials at read time, and compact() folds
-history into one sentinel row per cell so state stays at the grid size
+WOULD double-count — this maintainer therefore uses the partials +
+applied-ledger protocol of streaming/maintainer.py: per-batch cell
+increments MERGE keyed (d, bucket, batch_id); estimates fold the
+partials at read time, and compact() keeps state at the grid size
 (DEPTH×WIDTH counters) forever.
 
 The bucket derivation is IMPORTED from the batch operator (not
@@ -31,33 +30,20 @@ from pyspark.sql import functions as F
 
 from ..operators.pipelines import _CMS_BUCKET, CMS_DEPTH
 from ..warehouse.merge import ParquetTable, merge_into
-
-#: sentinel batch_id for compacted rows (real batch ids are ≥ 0)
-_COMPACTED = -1
+from .maintainer import LedgeredMaintainer
 
 
-class StreamingCountMin:
+class StreamingCountMin(LedgeredMaintainer):
     """Exactly-once incremental CMS over micro-batches of (token) rows
     (pass any frame with a `token` column; weights via `n` column)."""
 
     def __init__(self, spark: SparkSession, store_root: str):
-        self.spark = spark
+        super().__init__(spark, store_root)
         self.cells = ParquetTable(spark, os.path.join(store_root, "cells"))
-        self.applied = ParquetTable(spark, os.path.join(store_root, "applied"))
 
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
-    def process_batch(self, tokens: DataFrame, batch_id: int) -> int:
-        """Fold one micro-batch of token rows; replays are no-ops.
-        Returns the number of (d, bucket) cells the batch touched."""
-        if self._is_applied(batch_id):
-            return 0
+    def _fold(self, tokens: DataFrame, batch_id: int) -> int:
+        """Fold one micro-batch of token rows; returns the number of
+        (d, bucket) cells the batch touched."""
         counts = tokens.groupBy("token").agg(F.count("*").alias("n"))
         incr = (
             counts.withColumn(
@@ -68,10 +54,7 @@ class StreamingCountMin:
             .agg(F.expr("CAST(sum(n) AS BIGINT)").alias("cell"))
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        n = merge_into(self.cells, incr, ("d", "bucket", "batch_id"))
-        ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
-        merge_into(self.applied, ledger, ("batch_id",))
-        return n
+        return merge_into(self.cells, incr, ("d", "bucket", "batch_id"))
 
     # ------------------------------------------------------------------
     def grid(self) -> DataFrame:
@@ -103,52 +86,6 @@ class StreamingCountMin:
         )
 
     def compact(self) -> int:
-        """Fold per-batch partials into one sentinel row per cell; the
-        ledger keeps replays of compacted batches short-circuited.
-
-        Only LEDGERED partials fold into the sentinel: a batch that
-        crashed between the cells merge and the applied merge in
-        process_batch has partials but no ledger row, and its replay
-        passes the _is_applied check — folding those partials would
-        double-count the batch once the replay re-merges them.  Such
-        unledgered rows keep their (d, bucket, batch_id) identity so
-        the replay's merge_into overwrites them idempotently."""
-        if not self.cells.exists():
-            return 0
-        cells = self.cells.read()
-        applied = (
-            self.applied.read()
-            if self.applied.exists()
-            else self.spark.createDataFrame([], "batch_id long")
-        )
-        sentinel = F.col("batch_id") == _COMPACTED
-        ledgered = cells.where(sentinel).unionByName(
-            cells.where(~sentinel).join(
-                F.broadcast(applied), "batch_id", "left_semi"
-            )
-        )
-        unledgered = cells.where(~sentinel).join(
-            F.broadcast(applied), "batch_id", "left_anti"
-        )
-        folded = (
-            ledgered.groupBy("d", "bucket")
-            .agg(F.expr("CAST(sum(cell) AS BIGINT)").alias("cell"))
-            .withColumn("batch_id", F.lit(_COMPACTED).cast("long"))
-        )
-        rows = folded.unionByName(
-            unledgered.select("d", "bucket", "cell", "batch_id")
-        ).persist()
-        n = rows.count()
-        self.cells.overwrite(rows.select("d", "bucket", "cell", "batch_id"))
-        rows.unpersist()
-        return n
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        """Fold ledgered partials into one row per cell; returns the
+        resulting cell-row count."""
+        return self._compact(self.cells, ("d", "bucket"), ("cell",))

@@ -30,12 +30,13 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import quality_signals
 from ..warehouse.merge import ParquetTable, merge_into
+from .maintainer import StreamingMaintainer
 
 #: audit columns persisted for every kept document.
 KEPT_COLUMNS = ("doc_id", "n_words", "mean_word_len", "symbol_ratio")
 
 
-class StreamingCurator:
+class StreamingCurator(StreamingMaintainer):
     """Persistent-state incremental quality gate + exact dedup over
     micro-batches of (doc_id, text) rows."""
 
@@ -90,17 +91,3 @@ class StreamingCurator:
         kept = survivors.select(*KEPT_COLUMNS)
         merge_into(self.kept_table, kept, ["doc_id"], stamp_updated_at=False)
         return kept.count()
-
-    # ---- streaming attachment -------------------------------------------
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        """Wire onto a streaming DataFrame of (doc_id, text) rows:
-        checkpointed foreachBatch, replay-idempotent by construction."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import LSH_BUCKET_CAP, _band_signatures
 from ..warehouse.merge import ParquetTable, merge_into
+from .maintainer import StreamingMaintainer
 
 #: per-bucket pair expansion over a sorted doc_id array (same expression
 #: shape as operators.dedup.minhash_lsh_candidates).
@@ -51,7 +52,7 @@ _PAIR_EXPR = (
 )
 
 
-class StreamingDeduper:
+class StreamingDeduper(StreamingMaintainer):
     """Persistent-state incremental LSH dedup over micro-batches of
     (doc_id, text) rows."""
 
@@ -98,18 +99,4 @@ class StreamingDeduper:
         )
         return merge_into(
             self.pair_table, pairs, ["doc_a", "doc_b"], stamp_updated_at=False
-        )
-
-    # ---- streaming attachment -------------------------------------------
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        """Wire onto a streaming DataFrame of (doc_id, text) rows:
-        checkpointed foreachBatch, exactly-once pair emission by key."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

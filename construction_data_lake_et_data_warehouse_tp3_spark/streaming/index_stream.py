@@ -4,16 +4,11 @@ global doc/token counts folded across micro-batches exactly once, then
 BM25 served from the store for ANY query term set without rescanning
 history.
 
-State here is SUMS (df increments, doc counts), not an idempotent
-monoid — so unlike sketch_stream's ledger-free min-fold this maintainer
-uses the rollup_stream discipline:
-
-1. per batch, one map-side-combinable aggregation of the batch's OWN
-   docs → (term, df) partials + a 1-row (n_docs, total_tokens) global;
-2. partials keyed on (term, batch_id) / (batch_id) so an at-least-once
-   replay OVERWRITES its identical rows instead of double-counting;
-3. an applied-batch ledger short-circuits full replays;
-4. the serving view sums partials per term.
+State here is SUMS (df increments, doc counts), so it uses the partials
++ applied-ledger protocol of streaming/maintainer.py: per batch, one
+map-side-combinable aggregation of the batch's OWN docs → (term, df)
+partials keyed (term, batch_id) plus a 1-row (n_docs, total_tokens)
+global keyed (batch_id); the serving views sum partials.
 
 The correctness contract (tests/test_index_stream.py): folding the
 corpus in N batches and then scoring MUST equal the one-shot batch
@@ -23,10 +18,9 @@ full rebuild" property a production search pipeline audits.
 
 Scale: the per-batch shuffle carries the batch's own distinct (term,
 doc) pairs reduced to (term, df) partials; the store grows
-O(vocabulary × batches) until compact() folds history (same sentinel
-trick as rollup_stream); scoring is the batch operator's two
-embarrassingly-parallel passes with the stats arm replaced by the tiny
-store aggregate.
+O(vocabulary × batches) until compact() folds history; scoring is the
+batch operator's two embarrassingly-parallel passes with the stats arm
+replaced by the tiny store aggregate.
 """
 
 from __future__ import annotations
@@ -39,36 +33,23 @@ from pyspark.sql import functions as F
 from ..operators.dedup import TOKENS
 from ..operators.retrieval import BM25_TOP_K, _bm25_contrib
 from ..warehouse.merge import ParquetTable, merge_into
-
-#: sentinel batch_id for compacted rows (real batch ids are ≥ 0)
-_COMPACTED = -1
+from .maintainer import LedgeredMaintainer
 
 
-class StreamingIndexStats:
+class StreamingIndexStats(LedgeredMaintainer):
     """Exactly-once incremental BM25 corpus statistics."""
 
     def __init__(self, spark: SparkSession, store_root: str):
-        self.spark = spark
+        super().__init__(spark, store_root)
         self.term_partials = ParquetTable(spark, os.path.join(store_root, "terms"))
         self.global_partials = ParquetTable(
             spark, os.path.join(store_root, "globals")
         )
-        self.applied = ParquetTable(spark, os.path.join(store_root, "applied"))
 
     # ------------------------------------------------------------------
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> int:
+    def _fold(self, batch: DataFrame, batch_id: int) -> int:
         """Fold one micro-batch of documents (doc_id, text) into the
-        index stats; replays are no-ops.  Returns upserted term rows."""
-        if self._is_applied(batch_id):
-            return 0
+        index stats; returns upserted term rows."""
         base = batch.select("doc_id", F.expr(TOKENS).alias("ws"))
         terms = (
             base.select(F.explode(F.expr("array_distinct(ws)")).alias("term"))
@@ -82,8 +63,6 @@ class StreamingIndexStats:
         ).withColumn("batch_id", F.lit(batch_id).cast("long"))
         n = merge_into(self.term_partials, terms, ("term", "batch_id"))
         merge_into(self.global_partials, globals_, ("batch_id",))
-        ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
-        merge_into(self.applied, ledger, ("batch_id",))
         return n
 
     # ------------------------------------------------------------------
@@ -114,20 +93,10 @@ class StreamingIndexStats:
         )
 
     def compact(self) -> int:
-        """Fold per-batch partials into sentinel rows (rollup_stream's
-        compaction trick); the ledger keeps replays short-circuited."""
-        terms = self.term_df().withColumn(
-            "batch_id", F.lit(_COMPACTED).cast("long")
-        )
-        rows = terms.persist()
-        n = rows.count()
-        self.term_partials.overwrite(rows.select("term", "df", "batch_id"))
-        rows.unpersist()
-        g = self.stats().withColumn("batch_id", F.lit(_COMPACTED).cast("long"))
-        self.global_partials.overwrite(
-            g.select("n_docs", "total_tokens", "batch_id")
-        )
-        return n
+        """Fold ledgered partials into one row per term (and one global
+        row); returns the resulting term-row count."""
+        self._compact(self.global_partials, (), ("n_docs", "total_tokens"))
+        return self._compact(self.term_partials, ("term",), ("df",))
 
     # ------------------------------------------------------------------
     def score(self, docs: DataFrame, query_terms: tuple[str, ...]) -> DataFrame:
@@ -179,14 +148,4 @@ class StreamingIndexStats:
             )
             .orderBy(F.desc("score_micro"), "doc_id")
             .limit(BM25_TOP_K)
-        )
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid) and None
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

@@ -16,8 +16,7 @@ need deletes; deriving keeps every fold append/merge-only:
   window does) — min is an idempotent monoid, no ledger needed.
 - source counts (SUM partials keyed (source, batch_id) + applied
   ledger): per-source doc/token counts over ALL ingested docs, the
-  domain_mix inputs — sums need the ledger (the cms_stream/rollup
-  discipline).
+  domain_mix inputs — sums need the ledger (streaming/maintainer.py).
 
 manifest() = candidates ⋈ owners (owner == self) ⋈ weights(counts),
 with the weight formula replicated from domain_mix — so the view equals
@@ -45,19 +44,21 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import EVAL_MOD, _SHINGLES, TOKENS, quality_signals
 from ..warehouse.merge import ParquetTable, merge_into
+from .maintainer import LedgeredMaintainer
 
 
-class StreamingManifest:
+class StreamingManifest(LedgeredMaintainer):
     """Incremental training-manifest state over micro-batches of
     (doc_id, text, source) rows, against a frozen eval shingle set."""
 
+    _SKIPPED = {"candidates": 0, "hashes": 0}
+
     def __init__(self, spark: SparkSession, store_root: str, eval_shingles: list[str]):
-        self.spark = spark
+        super().__init__(spark, store_root)
         self.eval_shingles = sorted(set(eval_shingles))
         self.cand_table = ParquetTable(spark, os.path.join(store_root, "candidates"))
         self.owner_table = ParquetTable(spark, os.path.join(store_root, "hash_owners"))
         self.count_table = ParquetTable(spark, os.path.join(store_root, "source_counts"))
-        self.applied = ParquetTable(spark, os.path.join(store_root, "applied"))
 
     # ---- state views ----------------------------------------------------
 
@@ -80,22 +81,11 @@ class StreamingManifest:
             [], "source string, n_docs bigint, n_tokens bigint, batch_id long"
         )
 
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
     # ---- the foreachBatch body ------------------------------------------
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> dict:
-        """Fold one micro-batch of (doc_id, text, source) rows; replays
-        are no-ops. Returns {candidates, hashes} counts."""
-        if self._is_applied(batch_id):
-            return {"candidates": 0, "hashes": 0}
-
+    def _fold(self, batch: DataFrame, batch_id: int) -> dict:
+        """Fold one micro-batch of (doc_id, text, source) rows; returns
+        {candidates, hashes} counts."""
         hashed = batch.withColumn("h", F.md5("text"))
         # hash ownership folds over ALL docs (the batch window does too)
         batch_owners = hashed.groupBy("h").agg(F.min("doc_id").alias("owner"))
@@ -129,8 +119,6 @@ class StreamingManifest:
         merge_into(
             self.count_table, counts, ("source", "batch_id"), stamp_updated_at=False
         )
-        ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
-        merge_into(self.applied, ledger, ("batch_id",), stamp_updated_at=False)
         return {"candidates": n_cand, "hashes": n_hashes}
 
     # ---- the manifest view ------------------------------------------------
@@ -170,16 +158,4 @@ class StreamingManifest:
         )
         return kept.join(F.broadcast(self.weights()), "source").select(
             "doc_id", "source", "n_words", F.col("sample_weight").alias("weight")
-        )
-
-    # ---- streaming attachment ---------------------------------------------
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

@@ -1,28 +1,14 @@
 """Continuous aggregate — the streaming twin of the batch hypertable
 rollup (operators/analytics.time_bucket_rollup): an hour-grain
 materialized aggregate maintained incrementally by foreachBatch, exact
-under at-least-once replays.
+under at-least-once replays by the partials + applied-ledger protocol
+of streaming/maintainer.py.
 
-The exactly-once trick is PARTIAL-AGGREGATE MERGE, not blind addition:
-
-1. each micro-batch aggregates map-side to per-(bucket) partial sums
-   (COUNT, BIGINT cents) — commutative/associative state, so partials
-   compose in any order;
-2. partials land keyed on (bucket, batch_id) — a replayed batch
-   OVERWRITES its own identical partial row instead of double-counting
-   (blind `existing + delta` addition is wrong under at-least-once);
-3. an `applied` ledger of batch ids short-circuits full replays;
-4. the serving view sums partials per bucket — O(buckets × batches)
-   rows, bounded by `compact()` which folds history into one row per
-   bucket under a sentinel batch_id while the ledger keeps replayed
-   batches skippable.
-
-Crash safety: partials MERGE lands before the ledger append; a crash
-between them re-merges identical rows on replay (idempotent by key) and
-then completes the ledger. Scale: per-batch shuffle is on the bucket key
-of the batch's own data only; the store join is MERGE's key equi-join;
-nothing rescans history except compact(), which is itself one
-bucket-keyed aggregation.
+Each micro-batch aggregates map-side to per-bucket partial sums (COUNT,
+BIGINT cents) keyed (bucket, batch_id); the serving view sums partials
+per bucket. Scale: per-batch shuffle is on the bucket key of the batch's
+own data only; the store join is MERGE's key equi-join; nothing rescans
+history except compact(), which is itself one bucket-keyed aggregation.
 """
 
 from __future__ import annotations
@@ -33,12 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..warehouse.merge import ParquetTable, merge_into
-
-#: sentinel batch_id for compacted history rows (real batch ids are ≥ 0)
-_COMPACTED = -1
+from .maintainer import LedgeredMaintainer
 
 
-class StreamingRollup:
+class StreamingRollup(LedgeredMaintainer):
     """Incrementally-maintained hour-grain continuous aggregate."""
 
     def __init__(
@@ -49,9 +33,8 @@ class StreamingRollup:
         value_col: str = "value",
         grain: str = "hour",
     ):
-        self.spark = spark
+        super().__init__(spark, store_root)
         self.partials = ParquetTable(spark, os.path.join(store_root, "partials"))
-        self.applied = ParquetTable(spark, os.path.join(store_root, "applied"))
         self.ts = ts_col
         self.value = value_col
         self.grain = grain
@@ -79,24 +62,11 @@ class StreamingRollup:
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
 
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> int:
-        """Fold one micro-batch into the aggregate; replays are no-ops."""
-        if self._is_applied(batch_id):
-            return 0
-        upserted = merge_into(
+    def _fold(self, batch: DataFrame, batch_id: int) -> int:
+        """Merge one micro-batch's partials; returns upserted rows."""
+        return merge_into(
             self.partials, self._partials_of(batch, batch_id), ("bucket", "batch_id")
         )
-        ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
-        merge_into(self.applied, ledger, ("batch_id",))
-        return upserted
 
     # ------------------------------------------------------------------
     def rollup(self) -> DataFrame:
@@ -111,24 +81,6 @@ class StreamingRollup:
         )
 
     def compact(self) -> int:
-        """Fold per-batch partials into one sentinel row per bucket;
-        the ledger still short-circuits replays of folded batches.
-        Returns the resulting partial-row count."""
-        folded = self.rollup().withColumn(
-            "batch_id", F.lit(_COMPACTED).cast("long")
-        )
-        rows = folded.persist()
-        n = rows.count()
-        self.partials.overwrite(rows.select("bucket", "n_rows", "total_cents", "batch_id"))
-        rows.unpersist()
-        return n
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid) and None
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        """Fold ledgered partials into one row per bucket; returns the
+        resulting partial-row count."""
+        return self._compact(self.partials, ("bucket",), ("n_rows", "total_cents"))

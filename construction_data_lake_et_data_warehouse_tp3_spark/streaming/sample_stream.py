@@ -39,12 +39,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..warehouse.merge import ParquetTable
+from .maintainer import StreamingMaintainer
 
 #: the md5 coin — identical to fixed_k_sample's ordering hash.
 _COIN = "md5(CAST(doc_id AS STRING))"
 
 
-class StreamingFixedKSampler:
+class StreamingFixedKSampler(StreamingMaintainer):
     """Persistent bottom-k uniform sample per group over micro-batches
     of (doc_id, group) rows."""
 
@@ -139,13 +140,3 @@ class StreamingFixedKSampler:
         return ranked.join(ns, self.group_col).groupBy(
             self.group_col, "n_sample"
         ).agg(*aggs)
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

@@ -37,13 +37,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..warehouse.merge import ParquetTable, merge_into
+from .maintainer import StreamingMaintainer
 
 #: history-table columns (the batch operator's output schema, minus the
 #: generic key which callers name per dimension)
 _HISTORY_COLS = ("version", "state", "valid_from", "valid_to", "is_current")
 
 
-class StreamingScd2:
+class StreamingScd2(StreamingMaintainer):
     """Maintain a type-2 history table from a stream of change records."""
 
     def __init__(
@@ -180,16 +181,13 @@ class StreamingScd2:
         return merge_into(self.table, upsert, (self.key, "valid_from"))
 
     # ------------------------------------------------------------------
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid) and None
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def history(self) -> DataFrame:
-        """The full type-2 history (batch-operator column order)."""
+        """The full type-2 history (batch-operator column order); empty
+        before the first change lands."""
+        if not self.table.exists():
+            return self.spark.createDataFrame(
+                [],
+                f"{self.key} {self.key_type}, version long, state string,"
+                " valid_from timestamp, valid_to timestamp, is_current boolean",
+            )
         return self.table.read().select(self.key, *_HISTORY_COLS)

@@ -31,9 +31,10 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import KMV_K, _est, _h
 from ..warehouse.merge import ParquetTable
+from .maintainer import StreamingMaintainer
 
 
-class StreamingCardinality:
+class StreamingCardinality(StreamingMaintainer):
     """Per-group distinct-count sketch folded incrementally."""
 
     def __init__(
@@ -77,14 +78,4 @@ class StreamingCardinality:
         sum_mins = " + ".join(f"m{j}" for j in range(KMV_K))
         return self.store.read().select(
             self.group, F.expr(_est(sum_mins)).alias("est_distinct")
-        )
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid) and None
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

@@ -59,46 +59,6 @@ class TestStreamingCms:
         est = {r.token: r.cms_estimate for r in cms.estimate(probes).collect()}
         assert est["x"] >= 5
 
-    def test_compact_skips_unledgered_partials(self, spark, tmp_path):
-        """Crash window: cells merged but the applied-ledger row never
-        written. compact() must NOT fold those partials into the sentinel
-        — the batch replay passes _is_applied and re-merges, which would
-        double-count. Unledgered rows keep their identity so the replay
-        overwrites them idempotently."""
-        cms = StreamingCountMin(spark, str(tmp_path / "s"))
-        cms.process_batch(_tokens(spark, ["x"] * 4 + ["y"]), 0)
-
-        # simulate the crash: write batch 1's cell partials WITHOUT the
-        # ledger row (exactly what a crash between the two merges leaves)
-        from construction_data_lake_et_data_warehouse_tp3_spark.warehouse.merge import (
-            merge_into,
-        )
-
-        crashed = _tokens(spark, ["x", "x", "z"])
-        counts = crashed.groupBy("token").agg(F.count("*").alias("n"))
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.pipelines import (
-            _CMS_BUCKET,
-            CMS_DEPTH,
-        )
-
-        incr = (
-            counts.withColumn("d", F.explode(F.expr(f"sequence(0, {CMS_DEPTH - 1})")))
-            .withColumn("bucket", F.expr(_CMS_BUCKET))
-            .groupBy("d", "bucket")
-            .agg(F.expr("CAST(sum(n) AS BIGINT)").alias("cell"))
-            .withColumn("batch_id", F.lit(1).cast("long"))
-        )
-        merge_into(cms.cells, incr, ("d", "bucket", "batch_id"))
-
-        cms.compact()
-        # replay of batch 1 must still apply (no ledger row yet) and the
-        # final state must equal a clean two-batch fold
-        assert cms.process_batch(crashed, 1) > 0
-        clean = StreamingCountMin(spark, str(tmp_path / "clean"))
-        clean.process_batch(_tokens(spark, ["x"] * 4 + ["y"]), 0)
-        clean.process_batch(crashed, 1)
-        assert _grid(cms) == _grid(clean)
-
     def test_differential_vs_batch_operator_on_corpus(self, spark, tmp_path):
         """The sf0.001 corpus streamed in 2 chunks must reproduce the
         batch cms_heavy_hitters estimates for its top-K exactly."""
