@@ -4,7 +4,8 @@ Streaming ingest writes one file per micro-batch per partition
 (kafka_consumer_datalake.py batches ≙ our checkpointed sink) — at 100 TB
 that means millions of small files and a metadata-bound scan. Compaction
 rewrites a partition's many small files into few right-sized ones with
-an atomic directory swap, preserving every row.
+the commit log's directory swap (lake/commitlog.swap_dir), preserving
+every row.
 
 Target sizing: files ≈ total_bytes / target_file_mb, min 1. The rewrite
 is one narrow job (read → coalesce → write); no shuffle unless the
@@ -18,6 +19,8 @@ import shutil
 import uuid
 
 from pyspark.sql import SparkSession
+
+from .commitlog import swap_dir
 
 
 def partition_file_stats(path: str) -> tuple[int, int]:
@@ -58,10 +61,7 @@ def compact_partition(
         raise RuntimeError(
             f"compaction row mismatch {rows_before} -> {rows_after}, aborted"
         )
-    old = f"{partition_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(partition_path, old)
-    os.rename(tmp, partition_path)
-    shutil.rmtree(old)
+    swap_dir(partition_path, tmp)
     files_after, _ = partition_file_stats(partition_path)
     return {
         "skipped": False,

@@ -18,6 +18,8 @@ import re
 import shutil
 from datetime import date, datetime, timedelta, timezone
 
+from .commitlog import numbered
+
 _DATE_PART = re.compile(r"year=(\d+)/month=(\d+)/day=(\d+)$")
 
 
@@ -63,12 +65,7 @@ def apply_stream_retention(
 
 
 def list_versions(feed_path: str) -> list[tuple[int, str]]:
-    out = []
-    for path in glob.glob(os.path.join(feed_path, "version=v*")):
-        suffix = os.path.basename(path).replace("version=v", "")
-        if suffix.isdigit():
-            out.append((int(suffix), path))
-    return sorted(out)
+    return sorted(numbered(feed_path, "version=v").items())
 
 
 def apply_version_retention(

@@ -1,6 +1,6 @@
 """Multi-table atomic transactions over the parquet lake — the cross-table
-upgrade of the per-feed commit log (lake/writer.py `_commit_log`): a sync
-that lands dim_users AND its fact tables must expose either ALL of the new
+user of the lake commit log (lake/commitlog.py): a sync that lands
+dim_users AND its fact tables must expose either ALL of the new
 state or NONE of it, which per-table version commits cannot guarantee
 (the reference's MySQL warehouse gets this from InnoDB transactions,
 sync_to_mysql.py:117-142; the lake needs its own).
@@ -9,9 +9,9 @@ Design (Delta/Iceberg-shaped, filesystem-atomic primitives only):
 
 - every table write stages into `tables/<name>/_txn_<id>/` — underscore
   prefix, so Spark's file index never lists it as data;
-- `commit()` publishes ONE manifest `_txn_log/<n>.json` via write-temp +
-  os.rename (atomic) after claiming slot n with an O_EXCL `.claim` —
-  two committers can never take the same snapshot number;
+- `commit()` claims snapshot n (`_txn_log/<n>.claim`) and publishes ONE
+  manifest `_txn_log/<n>.json` through the commit log — two committers
+  can never take the same snapshot number;
 - a reader resolves a SNAPSHOT: the latest committed manifest ≤ the
   requested version gives, per table, the staged directory that snapshot
   sees. All tables in one manifest become visible in the same instant —
@@ -20,15 +20,12 @@ Design (Delta/Iceberg-shaped, filesystem-atomic primitives only):
 
 Scale notes: manifests are O(#tables) JSON — commit cost is independent
 of data volume; staged writes are plain parquet writes at full cluster
-parallelism; time travel is manifest selection, no data copies. On a
-shared filesystem/object store, swap os.rename for the store's atomic
-put-if-absent; call sites are unchanged.
+parallelism; time travel is manifest selection, no data copies.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 import time
@@ -37,10 +34,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-class TxnConflictError(RuntimeError):
-    """Raised when commit() loses the snapshot-slot race more than
-    max_retries times (heavy committer contention)."""
+from .commitlog import CommitLog
 
 
 class LakeTransaction:
@@ -79,38 +73,28 @@ class LakeTransaction:
             )
         return self.lakehouse.read(table)
 
-    def commit(self, max_retries: int = 100) -> int:
+    def commit(self) -> int:
         """Publish every staged table in ONE atomic manifest; returns the
         snapshot number. Nothing staged → error (empty commits hide bugs)."""
         if not self.staged:
             raise RuntimeError("nothing staged")
         if self.committed is not None:
             return self.committed
-        log_dir = self.lakehouse._log_dir
-        os.makedirs(log_dir, exist_ok=True)
-        for _ in range(max_retries):
-            n = self.lakehouse.latest_snapshot(include_claims=True) + 1
-            claim = os.path.join(log_dir, f"{n}.claim")
-            try:
-                with open(claim, "x") as fh:
-                    fh.write(self.txn_id)
-            except FileExistsError:
-                continue  # lost the slot race — probe the next number
-            manifest = {
+        log = self.lakehouse._log
+        n = log.claim(self.txn_id)
+        log.publish(
+            n,
+            {
                 "snapshot": n,
                 "txn_id": self.txn_id,
                 "committed_at": datetime.now(timezone.utc).isoformat(),
                 "tables": self.staged,
                 "records": self.records,
-            }
-            tmp = os.path.join(log_dir, f".{n}.json.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            os.rename(tmp, os.path.join(log_dir, f"{n}.json"))  # atomic publish
-            self.committed = n
-            self.lakehouse._clear_active(self.txn_id)
-            return n
-        raise TxnConflictError(f"no snapshot slot after {max_retries} attempts")
+            },
+        )
+        self.committed = n
+        self.lakehouse._clear_active(self.txn_id)
+        return n
 
     def abort(self) -> None:
         """Explicitly drop this transaction: delete its staged dirs and
@@ -156,8 +140,8 @@ class Lakehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._log_dir = os.path.join(root, "_txn_log")
-        self._active_dir = os.path.join(self._log_dir, "active")
+        self._log = CommitLog(os.path.join(root, "_txn_log"), "", ".json")
+        self._active_dir = os.path.join(self._log.directory, "active")
 
     # ---- write side -----------------------------------------------------
 
@@ -181,57 +165,40 @@ class Lakehouse:
 
     # ---- manifest resolution --------------------------------------------
 
-    def _committed_snapshots(self) -> list[int]:
-        out = []
-        for path in glob.glob(os.path.join(self._log_dir, "*.json")):
-            stem = os.path.basename(path).removesuffix(".json")
-            if stem.isdigit():
-                out.append(int(stem))
-        return sorted(out)
+    def latest_snapshot(self) -> int:
+        return max(self._log.published(), default=0)
 
-    def latest_snapshot(self, include_claims: bool = False) -> int:
-        taken = set(self._committed_snapshots())
-        if include_claims:
-            for path in glob.glob(os.path.join(self._log_dir, "*.claim")):
-                stem = os.path.basename(path).removesuffix(".claim")
-                if stem.isdigit():
-                    taken.add(int(stem))
-        return max(taken, default=0)
-
-    def _manifest(self, snapshot: int) -> dict:
-        with open(os.path.join(self._log_dir, f"{snapshot}.json")) as fh:
-            return json.load(fh)
-
-    def _resolve(self, table: str, snapshot: int | None) -> str:
-        """The staged dir `table` resolves to at `snapshot` (default
-        latest): the newest manifest ≤ snapshot that wrote the table."""
-        commits = self._committed_snapshots()
-        if snapshot is not None:
-            commits = [n for n in commits if n <= snapshot]
-        for n in reversed(commits):
-            manifest = self._manifest(n)
-            if table in manifest["tables"]:
-                return os.path.join(self.root, manifest["tables"][table])
-        raise KeyError(
-            f"table {table!r} has no committed state"
-            + (f" at snapshot {snapshot}" if snapshot is not None else "")
-        )
+    def _resolved(
+        self, snapshot: int | None = None, manifests: dict[int, dict] | None = None
+    ) -> dict[str, tuple[int, str]]:
+        """Every table visible at `snapshot` (default latest) → (the
+        manifest that wrote it, its staged dir): manifests ≤ snapshot in
+        ascending order, so the newest one that wrote a table wins.
+        `manifests` lets vacuum resolve many snapshots from one read."""
+        if manifests is None:
+            manifests = {n: self._log.record(n) for n in self._log.published()}
+        out: dict[str, tuple[int, str]] = {}
+        for n in sorted(manifests):
+            if snapshot is not None and n > snapshot:
+                break
+            for table, rel in manifests[n]["tables"].items():
+                out[table] = (n, os.path.join(self.root, rel))
+        return out
 
     # ---- read side ------------------------------------------------------
 
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
-        return self.spark.read.parquet(self._resolve(table, snapshot))
+        path = self.tables(snapshot).get(table)
+        if path is None:
+            raise KeyError(
+                f"table {table!r} has no committed state"
+                + (f" at snapshot {snapshot}" if snapshot is not None else "")
+            )
+        return self.spark.read.parquet(path)
 
     def tables(self, snapshot: int | None = None) -> dict[str, str]:
         """Every table visible at `snapshot` → its resolved directory."""
-        commits = self._committed_snapshots()
-        if snapshot is not None:
-            commits = [n for n in commits if n <= snapshot]
-        out: dict[str, str] = {}
-        for n in commits:  # ascending: later manifests win
-            for table, rel in self._manifest(n)["tables"].items():
-                out[table] = os.path.join(self.root, rel)
-        return out
+        return {t: path for t, (_, path) in self._resolved(snapshot).items()}
 
     # ---- maintenance ----------------------------------------------------
 
@@ -272,32 +239,19 @@ class Lakehouse:
                     os.remove(marker)
                 except FileNotFoundError:
                     pass  # cleared by a concurrent commit/abort/vacuum
-        commits = self._committed_snapshots()
-        # one read per manifest for the whole vacuum (the winner loop,
-        # done_txns, and live-set resolution all need them)
-        manifests = {n: self._manifest(n) for n in commits}
+        commits = self._log.published()
+        # one read per manifest for the whole vacuum
+        manifests = {n: self._log.record(n) for n in commits}
         retained = commits[-keep_snapshots:] if keep_snapshots else []
-        needed: set[int] = set(retained)
         # a retained snapshot may resolve a table through an OLDER
         # manifest (latest-write-wins): keep every manifest it resolves
-        # through, not just the retained window itself
-        for n in retained:
-            winner: dict[str, int] = {}
-            for c in (c for c in commits if c <= n):
-                for table in manifests[c]["tables"]:
-                    winner[table] = c
-            needed.update(winner.values())
-        # staged dirs: only what the retained snapshots actually SEE lives
+        # through, and only the staged dirs it actually SEES
+        needed: set[int] = set(retained)
         live = set()
         for n in retained:
-            resolved: dict[str, str] = {}
-            for c in (c for c in commits if c <= n):  # ascending: later wins
-                for table, rel in manifests[c]["tables"].items():
-                    resolved[table] = rel
-            live.update(
-                os.path.normpath(os.path.join(self.root, rel))
-                for rel in resolved.values()
-            )
+            for c, path in self._resolved(n, manifests).values():
+                needed.add(c)
+                live.add(os.path.normpath(path))
         # a txn_id appearing in any committed manifest is definitively
         # DONE — its unreferenced staging (superseded re-stages) is
         # reclaimable immediately, no age heuristic needed
@@ -319,12 +273,8 @@ class Lakehouse:
             shutil.rmtree(staged, ignore_errors=True)
             removed.append(staged)
         for n in commits:
-            if n in needed:
-                continue
-            for suffix in (".json", ".claim"):
-                path = os.path.join(self._log_dir, f"{n}{suffix}")
-                if os.path.exists(path):
-                    os.remove(path)
+            if n not in needed:
+                self._log.remove(n)
         return removed
 
     # ---- change data feed ------------------------------------------------
@@ -352,14 +302,8 @@ class Lakehouse:
         full-table MySQL re-sync (sync_to_mysql.py:117) lacks."""
         from pyspark.sql import functions as F
 
-        def _resolve_or_none(snapshot: int) -> str | None:
-            try:
-                return os.path.normpath(self._resolve(table, snapshot))
-            except KeyError:
-                return None
-
-        old_dir = _resolve_or_none(from_snapshot)
-        new_dir = _resolve_or_none(to_snapshot)
+        old_dir = self.tables(from_snapshot).get(table)
+        new_dir = self.tables(to_snapshot).get(table)
         if new_dir is None and old_dir is None:
             raise KeyError(f"table {table!r} exists at neither snapshot")
 

@@ -6,12 +6,13 @@ pandas iterators over `mapInPandas` — the only operators in the engine
 where Python in the dataflow is justified (per-byte media work has no
 JVM builtin).
 
-The actual codecs (PIL/ffmpeg/librosa) are NOT in this container, so the
-decode kernels are stubbed: `decode_image_stub` raises NotImplementedError
-when `strict`, else emits deterministic fake features. Everything
-Spark-side — schema, batch iteration, partitioning, output contract — is
-real and tested; swapping the stub for a real codec changes one inner
-function.
+Decode is real for the uncompressed formats: pure-numpy PPM (P6),
+WAV (PCM16) and Y4M (C420) decoders (`decode_ppm`, `decode_wav`,
+`decode_y4m*`) feed the stats, resize and frame-sample operators.
+Compressed codecs (PIL/ffmpeg/librosa) are not dependencies, so the
+generic `extract_features` path keeps `decode_image_stub`: a
+deterministic byte-histogram feature (`strict=True` raises), which the
+oracle-checked `multimodal_features` query reproduces in DuckDB.
 
 Scale notes: mapInPandas streams Arrow batches (spark.sql.execution.arrow.
 maxRecordsPerBatch bounds memory); media blobs never pass through the

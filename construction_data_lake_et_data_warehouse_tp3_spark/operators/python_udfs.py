@@ -9,8 +9,9 @@ transfer); none is row-at-a-time Python.
 Oracle discipline: aggregating UDFs compute in 64-bit fixed point inside
 pandas (int64 `.sum()` is exact and order-free), so DuckDB reproduces the
 values exactly; the scalar UDF is a pure string map with an exact SQL
-twin. The mapInPandas feature extractor is rows-only (its byte-histogram
-kernel is the stubbed multimodal decode)."""
+twin. The mapInPandas byte-histogram feature extractor is oracle-checked
+bit-for-bit; the PPM/WAV/Y4M queries run the real decoders of
+operators.multimodal."""
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession

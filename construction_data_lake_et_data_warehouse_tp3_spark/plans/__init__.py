@@ -6,4 +6,5 @@ from .analysis import (  # noqa: F401
     scan_read_schema,
     shuffle_exchange_count,
     wholestage_codegen_spans,
+    without_embeddings_spread,
 )

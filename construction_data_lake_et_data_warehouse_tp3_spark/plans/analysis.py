@@ -61,3 +61,20 @@ def wholestage_codegen_spans(df: DataFrame) -> int:
     spans = set(re.findall(r"WholeStageCodegen \((\d+)\)", text))
     spans |= set(re.findall(r"\*\((\d+)\)", text))  # Spark's *(N) shorthand
     return len(spans)
+
+
+def without_embeddings_spread(plan: str, parallelism: int) -> str:
+    """`plan` (explain text) with the loader's spread of the embeddings
+    scan renamed so it no longer reads as a shuffle Exchange:
+    `sources.registry.load_table` hash-repartitions a small embeddings
+    input on `vec_id` into `parallelism` partitions. Only that exchange,
+    directly over the embeddings parquet scan and its pushed filter, is
+    renamed; every computed shuffle stays."""
+    spread = re.compile(
+        rf"Exchange hashpartitioning\(vec_id#\d+L?, {parallelism}\), REPARTITION_BY_NUM"
+        r"[^\n]*\n(?:[ :]*\+- (?:Filter|ColumnarToRow) [^\n]*\n)*"
+        r"[ :]*\+- (?:File)?Scan parquet [^\n]*/embeddings\.parquet\b"
+    )
+    return spread.sub(
+        lambda m: m.group(0).replace("Exchange", "LoaderSpread", 1), plan
+    )

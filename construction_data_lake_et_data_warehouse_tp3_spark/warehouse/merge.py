@@ -9,7 +9,7 @@ Here a MERGE is one distributed job:
     kept   = target LEFT ANTI updates ON keys     (rows not being updated)
     result = kept UNION updates                   (updated + inserted rows)
 
-written with an atomic directory swap (write tmp → rename). Matched rows
+written to a temp dir, then swapped in (lake/commitlog.swap_dir). Matched rows
 are replaced wholesale, exactly like the reference's ON-DUPLICATE column
 lists which update every non-key column (+ updated_at).
 
@@ -29,13 +29,14 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..lake.commitlog import swap_dir
 
 
 class ParquetTable:
@@ -54,15 +55,13 @@ class ParquetTable:
         return self.spark.read.parquet(self.path)
 
     def overwrite(self, df: DataFrame) -> None:
-        """Commit df as the new table state via tmp-dir + atomic rename."""
+        """Commit df as the new table state: write a `__tmp_` dir, then
+        swap it in with two renames (live dir aside to `__old_`, tmp into
+        place). Not atomic: between the renames the table directory is
+        absent, so a concurrent reader can fail to find it."""
         tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        swap_dir(self.path, tmp)
 
 
 def dedupe_updates(

@@ -99,3 +99,35 @@ def test_pre_log_legacy_dirs_still_readable(spark, config):
     meta = writer.export_table(spark.range(11), cfg)
     assert meta["version"] == 4
     assert writer.read_table_feed(cfg).count() == 11
+
+
+def test_log_claims_race_free_under_threads(tmp_path):
+    """The shared claim → publish protocol behind feed versions and lake
+    transactions: more committers than cores, with frequent thread
+    switches, each get a distinct number and every record lands whole."""
+    import sys
+
+    from construction_data_lake_et_data_warehouse_tp3_spark.lake.commitlog import (
+        CommitLog,
+    )
+
+    log = CommitLog(str(tmp_path / "_txn_log"), "", ".json")
+
+    def commit(i):
+        n = log.claim(f"writer-{i}")
+        log.publish(n, {"snapshot": n, "writer": i})
+        return n
+
+    workers = 4 * (os.cpu_count() or 1)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = [pool.submit(commit, i) for i in range(workers)]
+            got = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(got) == list(range(1, workers + 1))
+    assert log.published() == sorted(got) and log.claims() == set(got)
+    assert {log.record(n)["writer"] for n in got} == set(range(workers))
+    assert not [n for n in os.listdir(log.directory) if n.endswith(".tmp")]

@@ -44,3 +44,34 @@ def test_every_query_survives_empty_tables(spark, empty_dir):
         f"{len(failures)} queries crash on zero-row input:\n"
         + "\n".join(sorted(failures))
     )
+
+
+def test_deployment_forms_survive_empty_tables(spark, empty_dir):
+    """The five bench deployment forms live outside the registry, so the
+    sweep above misses them: each must return 0 rows over empty tables,
+    with the column names and types it has over real data (nullability
+    may be stricter on the empty path)."""
+    import bench
+
+    def columns(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    forms = bench._deployment_forms()
+    assert sorted(forms) == [
+        "dup_clusters_fast",
+        "edit_distance_pairs_capped",
+        "jaccard_dup_pairs_router",
+        "leakage_safe_split_fast",
+        "minhash_lsh_candidates_fast",
+    ]
+    failures = []
+    for name, fn in sorted(forms.items()):
+        try:
+            got = fn(spark, empty_dir)
+            if got.count() != 0:
+                failures.append(f"{name}: rows on empty input")
+            elif columns(got) != columns(fn(spark, SRC)):
+                failures.append(f"{name}: schema {got.schema.simpleString()}")
+        except Exception as exc:  # noqa: BLE001 - aggregate, then fail
+            failures.append(f"{name}: {type(exc).__name__}: {exc}")
+    assert not failures, "\n".join(failures)

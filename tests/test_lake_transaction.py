@@ -78,6 +78,34 @@ class TestSnapshots:
         assert lh.read("t").collect()[0].v == ("b" if sb > sa else "a")
         assert lh.read("t", min(sa, sb)).count() == 1
 
+    def test_commit_skips_orphan_claim(self, spark, tmp_path):
+        """A committer that crashed after claiming leaves `2.claim` with
+        no manifest: the next commit probes past it to 3, readers never
+        see 2, and the commit writes exactly `3.claim` and `3.json`."""
+        root = str(tmp_path / "lh")
+        lh = Lakehouse(spark, root)
+        t1 = lh.begin()
+        t1.write("dim", _df(spark, [(1, "a")]))
+        assert t1.commit() == 1
+        log_dir = os.path.join(root, "_txn_log")
+        with open(os.path.join(log_dir, "2.claim"), "x") as fh:
+            fh.write("crashed")
+        assert lh.latest_snapshot() == 1
+        assert lh.read("dim").collect()[0].v == "a"
+        assert set(lh.tables()) == {"dim"}
+
+        t2 = lh.begin()
+        t2.write("dim", _df(spark, [(2, "b")]))
+        assert t2.commit() == 3
+        assert lh.latest_snapshot() == 3
+        assert lh.read("dim").collect()[0].v == "b"
+        assert lh.read("dim", 2).collect()[0].v == "a"  # 2 resolves to 1
+        assert set(lh.tables()) == {"dim"}
+        assert set(lh.tables(2)) == {"dim"}
+        assert sorted(os.listdir(log_dir)) == [
+            "1.claim", "1.json", "2.claim", "3.claim", "3.json", "active"
+        ]
+
 
 class TestAtomicWarehouseSync:
     def test_atomic_sync_matches_plain_sync(self, spark, tmp_path, plain_warehouse):

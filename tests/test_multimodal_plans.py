@@ -393,13 +393,20 @@ class TestPlans:
         scale, either way bucketed — and never degrade to the all-pairs
         shapes (CartesianProduct / BroadcastNestedLoopJoin). Any shuffle
         Exchange may partition only on the LSH key or on the final
-        distinct's output columns."""
+        distinct's output columns; the loader's vec_id spread over each
+        embeddings scan is not a computed shuffle and is exempted."""
         import re
 
         from construction_data_lake_et_data_warehouse_tp3_spark.operators import similarity
-        from construction_data_lake_et_data_warehouse_tp3_spark.plans import explain_str
+        from construction_data_lake_et_data_warehouse_tp3_spark.plans import (
+            explain_str,
+            without_embeddings_spread,
+        )
 
-        plan = explain_str(similarity.embedding_dup_pairs_bucketed(spark, SF_DIR), "simple")
+        plan = without_embeddings_spread(
+            explain_str(similarity.embedding_dup_pairs_bucketed(spark, SF_DIR), "simple"),
+            spark.sparkContext.defaultParallelism,
+        )
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert re.search(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[band", plan), plan

@@ -122,10 +122,17 @@ class TestR5dPlans:
         from construction_data_lake_et_data_warehouse_tp3_spark.operators.retrieval import (
             jl_projection,
         )
+        from construction_data_lake_et_data_warehouse_tp3_spark.plans import (
+            without_embeddings_spread,
+        )
 
-        plan = self._plan(jl_projection(spark, SF_DIR))
-        # map-only: no COMPUTED shuffle (the loader's small-input
-        # round-robin repartition is not a keyed exchange)
+        # map-only: no COMPUTED shuffle. The loader's small-input vec_id
+        # spread over the embeddings scan is not computed, so it is the
+        # one exchange exempted
+        plan = without_embeddings_spread(
+            self._plan(jl_projection(spark, SF_DIR)),
+            spark.sparkContext.defaultParallelism,
+        )
         assert plan.count("Exchange hashpartitioning") == 0
         assert plan.count("Exchange SinglePartition") == 0
         assert plan.count("Scan parquet") == 1
